@@ -1,7 +1,11 @@
 package graft.etl
 
+import org.apache.hadoop.conf.{Configurable, Configuration}
+import org.apache.hadoop.fs.{GlobFilter, Path, PathFilter}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.util.Try
 import graft.model.Schemas
 
 /** Schema-declared ingestion (reference ops 1, 2, 14, 16 — SURVEY.md §2).
@@ -15,9 +19,17 @@ import graft.model.Schemas
   * Spark-first mapping: `spark.read.schema(...).json(path)` name-matches
   * fields exactly like `JSON 'auto'`; the JSONPaths positional contract
   * becomes the explicit rename list below (single source of truth, in the
-  * JSONPaths order). Epoch millis → `timestamp_millis`. At cluster scale
-  * the JSON reader splits files across tasks natively — the COPY fan-out
-  * (reference manage_cluster.py:34–36) needs no code here.
+  * JSONPaths order). Epoch millis → `timestamp_millis`.
+  *
+  * The JSON readers take a file, a directory or a Hadoop glob. The
+  * reference COPYs a prefix of one-song files, `song_data/A/B/C/TR….json`,
+  * which a glob with a `*` at each of the four levels matches. Handed a
+  * glob, Spark expands it on the driver and then, past 32 matches, looks
+  * every matched file up again in a distributed listing job. A glob is
+  * instead listed once, on the driver: recursively from its literal
+  * directory prefix, with a listing-time [[GlobPathFilter]] that keeps
+  * exactly the files the glob matches. The file set and rows equal Spark's
+  * own expansion outside directories named `_…` or `.…` (see `readJson`).
   */
 object Ingest {
 
@@ -35,7 +47,7 @@ object Ingest {
 
   /** Raw JSON log events → staging_events layout (op 1 + 14 + 16). */
   def readLogEvents(spark: SparkSession, path: String): DataFrame =
-    stageLogEvents(spark.read.schema(Schemas.logEventJson).json(path))
+    stageLogEvents(readJson(spark, Schemas.logEventJson, path))
 
   /** The staging transform alone, for testing and for non-JSON inputs:
     * rename camelCase→snake_case in JSONPaths order, convert epoch millis.
@@ -50,7 +62,7 @@ object Ingest {
 
   /** Song metadata, name-matched like `JSON 'auto'` (op 2). */
   def readSongs(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Schemas.songJson).json(path)
+    readJson(spark, Schemas.songJson, path)
       .select(Schemas.songJson.fieldNames.map(col).toSeq: _*)
 
   /** Schema-declared CSV source — same no-inference rule as the JSON
@@ -86,11 +98,57 @@ object Ingest {
       "schema already declares _corrupt_record")
     val withCorrupt = schema.add("_corrupt_record",
       org.apache.spark.sql.types.StringType)
-    spark.read.schema(withCorrupt)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
+    readJson(spark, withCorrupt, path, Map(
+      "mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt_record"))
   }
+
+  /** The JSON source of the three readers above. A path without glob
+    * characters is read as Spark reads it. A glob is read from its literal
+    * directory prefix with `recursiveFileLookup`, and a [[GlobPathFilter]]
+    * keeps the files the rest of the glob matches, plus the files directly
+    * inside a directory it matches. Spark's own expansion still serves the
+    * cases the prefix listing cannot reproduce: braces around a `/`, a
+    * malformed glob or a prefix that is not a directory (Spark's error), a
+    * glob that matches no file, and a matched directory with files in its
+    * subdirectories (Spark reads those only as `k=v` partitions).
+    *
+    * One difference remains: the prefix listing skips directories whose
+    * names start with `_` or `.`, as every Spark directory listing does,
+    * while Spark's glob expansion enters them when a wildcard matches them.
+    */
+  private def readJson(spark: SparkSession, schema: StructType, path: String,
+                       options: Map[String, String] = Map.empty): DataFrame = {
+    def read(p: String, extra: Map[String, String]): DataFrame =
+      spark.read.schema(schema).options(options ++ extra).json(p)
+    globSplit(spark, path).flatMap { case (root, glob) =>
+      val df = read(root.toString, Map(
+        "recursiveFileLookup" -> "true",
+        "mapreduce.input.pathFilter.class" -> classOf[GlobPathFilter].getName,
+        GlobPathFilter.DepthKey -> root.depth.toString,
+        GlobPathFilter.GlobKey -> glob.mkString("/")))
+      val depths = df.inputFiles.map(f => new Path(new java.net.URI(f)).depth)
+      Option.when(depths.nonEmpty && depths.max <= root.depth + glob.size + 1)(df)
+    }.getOrElse(read(path, Map.empty))
+  }
+
+  /** A glob's literal directory prefix, qualified, and its components
+    * below that prefix; None when Spark's expansion must read the glob.
+    */
+  private def globSplit(spark: SparkSession, path: String): Option[(Path, Seq[String])] =
+    if (!isGlob(path)) None else Try {
+      val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val chain = Iterator.iterate(fs.makeQualified(new Path(path)))(_.getParent)
+        .takeWhile(_ != null).toIndexedSeq.reverse // the root directory first
+      val first = chain.indexWhere(p => isGlob(p.getName))
+      val glob = chain.drop(first).map(_.getName)
+      // throws on a malformed component, braces around a `/` included
+      glob.foreach(new GlobFilter(_))
+      Option.when(first > 0 && fs.getFileStatus(chain(first - 1)).isDirectory)(
+        (chain(first - 1), glob))
+    }.toOption.flatten
+
+  /** Spark's test for a glob path (`SparkHadoopUtil.isGlobPath`). */
+  private def isGlob(s: String): Boolean = s.exists("{}[]*?\\".contains(_))
 
   /** Columnar ORC source (Spark-native reader — vectorized, predicate
     * pushdown and column pruning like parquet). ORC files are
@@ -157,4 +215,40 @@ object Ingest {
       case _                => raw
     }
   }
+}
+
+/** Listing-time filter for a glob read from its literal prefix: keeps a
+  * file whose path components below the prefix, taken one per glob
+  * component, match those components. Components are decoded Hadoop path
+  * names, so a space or `%` in a directory name matches as itself. A file
+  * deeper than the glob sits under a matched directory and is kept, so
+  * that `Ingest` sees it and leaves such a glob to Spark's expansion.
+  * Hadoop builds one instance per listing through `setConf`; it is
+  * serializable because Spark's parallel listing ships it to its tasks.
+  */
+private[etl] final class GlobPathFilter extends PathFilter with Configurable with Serializable {
+  @transient private var conf: Configuration = _
+  private var depth = 0
+  private var glob: Array[String] = Array.empty
+  @transient private lazy val filters = glob.map(new GlobFilter(_))
+
+  override def setConf(c: Configuration): Unit = {
+    conf = c
+    depth = c.getInt(GlobPathFilter.DepthKey, 0)
+    glob = c.get(GlobPathFilter.GlobKey, "").split('/')
+  }
+  override def getConf: Configuration = conf
+
+  override def accept(p: Path): Boolean = {
+    val extra = p.depth - depth - glob.length
+    extra >= 0 && {
+      val below = Iterator.iterate(p)(_.getParent).drop(extra).take(glob.length).toSeq.reverse
+      filters.zip(below).forall { case (f, dir) => f.accept(dir) }
+    }
+  }
+}
+
+private[etl] object GlobPathFilter {
+  private[etl] val DepthKey = "graft.ingest.glob.prefixDepth"
+  private[etl] val GlobKey = "graft.ingest.glob.components"
 }

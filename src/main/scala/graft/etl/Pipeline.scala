@@ -27,50 +27,55 @@ object Pipeline {
 
     val se = events.cache()
     val ss = songs.cache()
-
-    val songplays = Transforms.withSurrogateId(Transforms.buildSongplays(se, ss))
-      .withColumn("year", year(col("start_time")))
-      .withColumn("month", month(col("start_time")))
-
-    // (name, df, partition columns) — the five writes are mutually
-    // independent (distinct output dirs, all roots cached), so they run
-    // OVERLAPPED on a small thread pool instead of as five sequential
-    // action barriers: the tail tasks of one write back-fill cores the
-    // next write's scan would leave idle (the guide's §2.6 pattern; the
-    // reference's insert loop is sequential only because Python is).
-    // Per-statement log-and-continue semantics are unchanged — each
-    // thread catches its own failure, like etl.py:27–30/49–50.
-    val writes: Seq[(String, DataFrame, Seq[String])] = Seq(
-      ("time", Transforms.buildTime(se), Nil),
-      ("users", Transforms.buildUsers(se), Nil),
-      ("songs", Transforms.buildSongs(ss), Nil),
-      ("artists", Transforms.buildArtists(se, ss), Nil),
-      ("songplays", songplays, Seq("year", "month")))
-
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures = writes.map { case (name, df, parts) =>
-      scala.concurrent.Future {
-        // Row counts ride the write itself via observe() — no second
-        // scan of the written table (a full re-read per write would be
-        // a genuine extra pass at 100 TB).
-        try {
-          val obs = Observation(s"rows_$name")
-          val observed = df.observe(obs, count(lit(1)).as("n"))
-          val w = observed.write.mode(saveMode)
-          (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-            .parquet(s"$outDir/$name")
-          name -> Right(obs.get("n").asInstanceOf[Long])
-        } catch { case e: Throwable => name -> Left(e) }
+    // A transform that fails analysis throws out of here, and an
+    // interrupted Await leaves writes running: neither may leak the
+    // staging cache entries or the pool.
+    try {
+      val songplays = Transforms.withSurrogateId(Transforms.buildSongplays(se, ss))
+        .withColumn("year", year(col("start_time")))
+        .withColumn("month", month(col("start_time")))
+
+      // (name, df, partition columns) — the five writes are mutually
+      // independent (distinct output dirs, all roots cached), so they run
+      // OVERLAPPED on a small thread pool instead of as five sequential
+      // action barriers: the tail tasks of one write back-fill cores the
+      // next write's scan would leave idle (the guide's §2.6 pattern; the
+      // reference's insert loop is sequential only because Python is).
+      // Per-statement log-and-continue semantics are unchanged — each
+      // thread catches its own failure, like etl.py:27–30/49–50.
+      val writes: Seq[(String, DataFrame, Seq[String])] = Seq(
+        ("time", Transforms.buildTime(se), Nil),
+        ("users", Transforms.buildUsers(se), Nil),
+        ("songs", Transforms.buildSongs(ss), Nil),
+        ("artists", Transforms.buildArtists(se, ss), Nil),
+        ("songplays", songplays, Seq("year", "month")))
+
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      val futures = writes.map { case (name, df, parts) =>
+        scala.concurrent.Future {
+          // Row counts ride the write itself via observe() — no second
+          // scan of the written table (a full re-read per write would be
+          // a genuine extra pass at 100 TB).
+          try {
+            val obs = Observation(s"rows_$name")
+            val observed = df.observe(obs, count(lit(1)).as("n"))
+            val w = observed.write.mode(saveMode)
+            (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
+              .parquet(s"$outDir/$name")
+            name -> Right(obs.get("n").asInstanceOf[Long])
+          } catch { case e: Throwable => name -> Left(e) }
+        }
       }
+      val results = futures.map(f =>
+        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
+      val counts = results.collect { case (n, Right(c)) => n -> c }.toMap
+      val failures = results.collect { case (n, Left(e)) => n -> e }.toMap
+      Result(counts, failures)
+    } finally {
+      pool.shutdown()
+      se.unpersist(); ss.unpersist()
     }
-    val results = futures.map(f =>
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-    pool.shutdown()
-    val counts = results.collect { case (n, Right(c)) => n -> c }.toMap
-    val failures = results.collect { case (n, Left(e)) => n -> e }.toMap
-    se.unpersist(); ss.unpersist()
-    Result(counts, failures)
   }
 }

@@ -57,6 +57,19 @@ class PipelineSpec extends SparkSpec {
     assert(r.counts.keySet.contains("time") && r.counts.keySet.contains("users"))
   }
 
+  test("a run that fails analysis releases both staging caches") {
+    val out = Files.createTempDirectory("graft-pipe-nopage").toString
+    val (se, ss) = fixtures
+    // a fresh relation: a `drop` over the fixture would let the analyzer
+    // resolve `page` from the plan below it
+    val noPage = spark.createDataFrame(
+      java.util.Arrays.asList(se.drop("page").collect(): _*), se.drop("page").schema)
+    intercept[org.apache.spark.sql.AnalysisException](
+      Pipeline.run(spark, noPage, ss, out))
+    assert(noPage.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(ss.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("bucketed tables join with zero shuffle exchanges") {
     val facts = (1L to 1000L).map(i => (i % 100, i, i * 2.0))
       .toDF("key", "id", "amount")
