@@ -423,7 +423,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- headline aggregations (analytics capability, README.md:9) ----
 

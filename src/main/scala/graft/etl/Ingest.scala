@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.hadoop.conf.{Configurable, Configuration}
 import org.apache.hadoop.fs.{GlobFilter, Path, PathFilter}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetFooters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import scala.util.Try
@@ -30,6 +31,20 @@ import graft.model.Schemas
   * directory prefix, with a listing-time [[GlobPathFilter]] that keeps
   * exactly the files the glob matches. The file set and rows equal Spark's
   * own expansion outside directories named `_…` or `.…` (see `readJson`).
+  *
+  * Parquet schemas are read on the driver. Handed no schema, Spark infers
+  * a parquet schema while it builds the DataFrame, and it reads the footer
+  * it needs in a one-task Spark job: one job per table read, before any
+  * action. [[readParquet]] lists a single file or a directory
+  * without subdirectories on the driver, keeps the names Spark's listing
+  * keeps, picks the file Spark's non-merging inference picks
+  * (`_common_metadata`, else `_metadata`, else the first data file by path
+  * string), reads its footer with Spark's own reader and schema converter,
+  * and passes the schema to the read. Spark's own inference still serves a
+  * glob, a directory with subdirectories (`k=v` partitions), a missing
+  * path, `spark.sql.parquet.mergeSchema=true`, a session Hadoop input path
+  * filter, and a file set with no readable footer, so its schema or its
+  * error stays what it was.
   */
 object Ingest {
 
@@ -187,7 +202,35 @@ object Ingest {
   /** Parquet-backed variant so the same transforms run on harness testdata. */
   def readTable(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") readEvents(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else readParquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema inferred on the driver:
+    * same schema, rows and errors, and no Spark job while the frame is
+    * built. The object's scaladoc says which file gives the schema and
+    * which paths are left to Spark's own inference.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    parquetSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def parquetSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = GraftParquetFooters.hadoopConf(spark)
+    // Spark's listing applies a session Hadoop input path filter when one is set
+    if (isGlob(path) || GraftParquetFooters.mergesSchemas(spark) ||
+        conf.get("mapreduce.input.pathFilter.class") != null) None
+    else Try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(conf)
+      val status = fs.getFileStatus(root)
+      val files = (if (status.isDirectory) fs.listStatus(root).toSeq else Seq(status))
+        .filterNot(f => GraftParquetFooters.isHidden(f.getPath.getName))
+        .sortBy(_.getPath.toString)
+      val summaries = Seq("_common_metadata", "_metadata")
+      if (files.exists(_.isDirectory)) None
+      else summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+        .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+        .flatMap(GraftParquetFooters.schemaOf(spark, _))
+    }.toOption.flatten
+  }
 
   /** The harness `events` table has shipped `ts` in several parquet physical
     * types across testdata generations; normalize all of them to a plain
@@ -206,9 +249,12 @@ object Ingest {
     *    to naive parquet timestamps.
     *  - timestamp[µs] UTC-adjusted → already TimestampType, pass through.
     */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    normalizeEventTs(readParquet(spark, s"$dir/events.parquet"))
+
+  /** The `ts` normalization of [[readEvents]] alone, for testing. */
+  private[graft] def normalizeEventTs(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-    val raw = spark.read.parquet(s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.etl.Ingest
 
 /** Snapshot maintenance operators: table diff (what changed between two
   * snapshots of the same logical table) and small-file compaction (rewrite
@@ -83,9 +84,9 @@ object Snapshot {
     val totalBytes = fs.listStatus(path).filter(_.isFile)
       .filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir).repartition(nFiles)
+    Ingest.readParquet(spark, inDir).repartition(nFiles)
       .write.mode("overwrite").parquet(outDir)
-    spark.read.parquet(outDir)
+    Ingest.readParquet(spark, outDir)
   }
 
   /** Number of data files currently backing a parquet directory. */

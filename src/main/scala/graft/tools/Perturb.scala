@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.etl.Ingest
 
 /** Second-seed fixture generator (tooling, not harness contract; VERDICT
   * r16 item 6): writes an alternate DRAW of an sf-dir — same schemas,
@@ -77,7 +78,7 @@ object Perturb {
 
   def generate(spark: SparkSession, src: String, out: String,
                seed: String = ""): Unit = {
-    def rd(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
+    def rd(t: String): DataFrame = Ingest.readParquet(spark, s"$src/$t.parquet")
     // Single FILE per table (like the driver fixtures): parity.py's
     // DuckDB views read `<dir>/<t>.parquet` as a file, not a directory.
     def wr(df: DataFrame, t: String): Unit = {

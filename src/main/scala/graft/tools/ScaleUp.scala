@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.etl.Ingest
 
 /** Scale-test fixture generator (tooling, not harness contract): writes a
   * `factor`-times-larger copy of an sf-dir by unioning `factor` id-shifted
@@ -71,12 +72,12 @@ object ScaleUp {
     }
 
     copied.foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      Ingest.readParquet(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
       println(s"[scaleup] $t: copied")
     }
     shifted.keys.toSeq.sorted.foreach { t =>
-      val base = spark.read.parquet(s"$src/$t.parquet")
+      val base = Ingest.readParquet(spark, s"$src/$t.parquet")
       val scaled = (0 until factor).map(copyOf(t, base, _)).reduce(_ union _)
       scaled.write.mode("overwrite").parquet(s"$out/$t.parquet")
       println(s"[scaleup] $t: x$factor")

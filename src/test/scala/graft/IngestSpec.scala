@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path => JPath}
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -204,10 +205,11 @@ class IngestSpec extends SparkSpec {
     finally spark.conf.unset(key)
   }
 
-  test("building readSongs over a glob of 40 files starts no Spark job") {
-    val root = Files.createTempDirectory("graft-glob-jobs")
-    writeTree(root, (0 until 40).map(i => s"${"ABCD"(i % 4)}/${i % 3}/$i/TR$i.json"))
-    val glob = s"$root/*/*/*/*.json"
+  /** Spark jobs started by each block, by name. The blocks run in order,
+    * then a marker job; listener events arrive in order, so once the
+    * marker is seen every job the blocks started has been counted.
+    */
+  private def jobsStarted(blocks: (String, () => Any)*): Map[String, Int] = {
     val probe = "graft.test.ingest.probe"
     val started = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
     val done = new java.util.concurrent.CountDownLatch(1)
@@ -221,22 +223,185 @@ class IngestSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty(probe, "ingest")
-      val songs = Ingest.readSongs(spark, glob)
-      sc.setLocalProperty(probe, "spark")
-      spark.read.schema(Schemas.songJson).json(glob)
-      // listener events arrive in order: once the marker job is seen,
-      // every job the two reads started has been counted
+      blocks.foreach { case (tag, block) =>
+        sc.setLocalProperty(probe, tag)
+        block()
+      }
       sc.setLocalProperty(probe, "marker")
       sc.parallelize(Seq(1), 1).count()
       assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(!started.containsKey("ingest"), s"jobs started: $started")
-      // the same glob through Spark's expansion lists its files in a job
-      assert(started.getOrDefault("spark", 0) >= 1, s"jobs started: $started")
-      assert(songs.count() == 40)
+      blocks.map { case (tag, _) => tag -> started.getOrDefault(tag, 0).intValue }.toMap
     } finally {
       sc.setLocalProperty(probe, null)
       sc.removeSparkListener(listener)
     }
   }
+
+  test("building readSongs over a glob of 40 files starts no Spark job") {
+    val root = Files.createTempDirectory("graft-glob-jobs")
+    writeTree(root, (0 until 40).map(i => s"${"ABCD"(i % 4)}/${i % 3}/$i/TR$i.json"))
+    val glob = s"$root/*/*/*/*.json"
+    var songs: DataFrame = null
+    val started = jobsStarted(
+      "ingest" -> (() => songs = Ingest.readSongs(spark, glob)),
+      "spark" -> (() => spark.read.schema(Schemas.songJson).json(glob)))
+    assert(started("ingest") == 0, s"jobs started: $started")
+    // the same glob through Spark's expansion lists its files in a job
+    assert(started("spark") >= 1, s"jobs started: $started")
+    assert(songs.count() == 40)
+  }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Row count and an order-free sum of row hashes over every column. */
+  private def fingerprint(df: DataFrame): (Long, Long) = {
+    import org.apache.spark.sql.functions.{count, lit, pmod, sum, xxhash64}
+    val r = df.agg(count(lit(1)), sum(pmod(xxhash64(df.columns.map(c => df.col(s"`$c`")).toIndexedSeq: _*),
+      lit(Int.MaxValue.toLong)))).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  private def assertSameParquet(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema, s"$what schema")
+    assert(fingerprint(got) == fingerprint(want), s"$what rows")
+  }
+
+  test("readTable and readParquet give Spark's inferred schema and rows for every table") {
+    val tables = new java.io.File(sf).list().filter(_.endsWith(".parquet")).sorted
+    assert(tables.length >= 10)
+    tables.foreach { f =>
+      val name = f.stripSuffix(".parquet")
+      val spark0 = spark.read.parquet(s"$sf/$f")
+      assertSameParquet(Ingest.readParquet(spark, s"$sf/$f"), spark0, f)
+      assertSameParquet(Ingest.readTable(spark, sf, name),
+        if (name == "events") Ingest.normalizeEventTs(spark0) else spark0, s"readTable $name")
+    }
+  }
+
+  /** A Spark-written directory: part files, `_SUCCESS` and `.crc` files. */
+  private def writeParquetDir(df: DataFrame): String = {
+    val out = Files.createTempDirectory("graft-parquet").resolve("t").toString
+    df.repartition(3).write.parquet(out)
+    out
+  }
+
+  private def partFiles(dir: String): Seq[JPath] =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName).map(_.toPath).toSeq
+
+  test("a Spark-written directory reads with Spark's schema, field metadata included") {
+    import org.apache.spark.sql.functions.expr
+    import org.apache.spark.sql.types.MetadataBuilder
+    val meta = new MetadataBuilder().putString("comment", "kept").build()
+    val df = spark.range(0, 50).select(col("id"), (col("id") % 7).as("k", meta),
+      expr("cast(timestamp_seconds(id) as timestamp_ntz)").as("ntz"), expr("array(id, id + 1)").as("xs"),
+      expr("named_struct('a', cast(id as int), 'b', cast(id as string))").as("s"))
+    val dir = writeParquetDir(df)
+    val names = new java.io.File(dir).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(n => n.startsWith(".") && n.endsWith(".crc")))
+    val got = Ingest.readParquet(spark, dir)
+    assertSameParquet(got, spark.read.parquet(dir), dir)
+    assert(got.schema("k").metadata == meta)
+    assertSameParquet(Ingest.readParquet(spark, partFiles(dir).head.toString),
+      spark.read.parquet(partFiles(dir).head.toString), "single part file")
+  }
+
+  /** One directory holding a single-file parquet write of each frame,
+    * under the given name.
+    */
+  private def mixedDir(files: (String, DataFrame)*): String = {
+    val root = Files.createTempDirectory("graft-parquet-mixed")
+    files.foreach { case (name, df) =>
+      Files.copy(partFiles(writeParquetDir(df.coalesce(1))).head, root.resolve(name))
+    }
+    root.toString
+  }
+
+  test("part files of different schemas: the file Spark would pick decides the schema") {
+    val ab = spark.range(0, 5).selectExpr("id as a", "cast(id as string) as b")
+    val xy = spark.range(10, 13).selectExpr("cast(id as int) as x", "id * 0.5 as y")
+    val cases = Seq(
+      "first data file" -> mixedDir("part-0-b.parquet" -> xy, "part-1-a.parquet" -> ab),
+      "first data file, other order" -> mixedDir("part-0.parquet" -> ab, "part-1.parquet" -> xy),
+      "_common_metadata" -> mixedDir("_common_metadata" -> xy, "_metadata" -> ab,
+        "part-0.parquet" -> ab),
+      "_metadata" -> mixedDir("_metadata" -> xy, "part-0.parquet" -> ab),
+      "hidden files" -> mixedDir("_a.parquet" -> xy, ".b.parquet" -> xy,
+        "c.parquet._COPYING_" -> xy, "part-0.parquet" -> ab))
+    cases.foreach { case (what, dir) =>
+      assertSameParquet(Ingest.readParquet(spark, dir), spark.read.parquet(dir), what)
+    }
+    assert(Ingest.readParquet(spark, cases(0)._2).columns.toSeq == Seq("x", "y"))
+    assert(Ingest.readParquet(spark, cases(2)._2).columns.toSeq == Seq("x", "y"))
+  }
+
+  test("partitioned, missing, unreadable, merged and path-filtered reads are left to Spark") {
+    /** Same schema and rows as `spark.read.parquet`, or the same error. */
+    def assertSameOutcome(path: String): Unit =
+      (Try(spark.read.parquet(path)).map(df => (df, fingerprint(df))),
+       Try(Ingest.readParquet(spark, path)).map(df => (df, fingerprint(df)))) match {
+        case (Success((want, wantRows)), Success((got, gotRows))) =>
+          assert(got.schema == want.schema && gotRows == wantRows, path)
+        case (Failure(want), Failure(got)) =>
+          assert(got.getClass == want.getClass, s"$path: $got vs $want")
+        case outcomes => fail(s"$path: $outcomes")
+      }
+    val parted = Files.createTempDirectory("graft-parquet-parted").resolve("t").toString
+    spark.range(0, 20).selectExpr("id", "id % 3 as k").write.partitionBy("k").parquet(parted)
+    assertSameOutcome(parted)
+    assert(Ingest.readParquet(spark, parted).columns.toSeq == Seq("id", "k"))
+    // a data file beside a subdirectory, sorting before it
+    val nested = mixedDir("a.parquet" -> spark.range(2).selectExpr("id as a"))
+    Files.createDirectories(java.nio.file.Paths.get(nested, "k=1"))
+    Files.copy(partFiles(writeParquetDir(spark.range(2).selectExpr("id as b"))).head,
+      java.nio.file.Paths.get(nested, "k=1", "part-0.parquet"))
+
+    val unreadable = Files.createTempDirectory("graft-parquet-bad")
+    Files.createFile(unreadable.resolve("part-0.parquet")) // zero bytes, sorts first
+    Files.copy(partFiles(writeParquetDir(spark.range(3).toDF())).head,
+      unreadable.resolve("part-1.parquet"))
+    val empty = Files.createTempDirectory("graft-parquet-empty")
+    Seq(nested, s"$sf/missing.parquet", unreadable.toString, empty.toString)
+      .foreach(assertSameOutcome)
+
+    val mixed = mixedDir("part-0.parquet" -> spark.range(2).selectExpr("id as a"),
+      "part-1.parquet" -> spark.range(2).selectExpr("id as b"))
+    def withConf(key: String, value: String)(check: DataFrame => Unit): Unit = {
+      spark.conf.set(key, value)
+      try check(Ingest.readParquet(spark, mixed))
+      finally spark.conf.unset(key)
+    }
+    withConf("spark.sql.parquet.mergeSchema", "true") { got =>
+      assert(got.columns.toSeq == Seq("a", "b"))
+      assertSameParquet(got, spark.read.parquet(mixed), "merged")
+    }
+    // a session Hadoop path filter hides part-0 from Spark's listing
+    withConf("mapreduce.input.pathFilter.class", classOf[SkipPart0].getName) { got =>
+      assert(got.columns.toSeq == Seq("b"))
+      assertSameParquet(got, spark.read.parquet(mixed), "path filter")
+    }
+    assert(Ingest.readParquet(spark, mixed).columns.toSeq == Seq("a"))
+  }
+
+  test("building readTable starts no Spark job; Spark's own inference starts one") {
+    var df: DataFrame = null
+    val started = jobsStarted(
+      "ingest" -> (() => df = Ingest.readTable(spark, sf, "lineitem")),
+      "events" -> (() => Ingest.readTable(spark, sf, "events")),
+      "spark" -> (() => spark.read.parquet(s"$sf/lineitem.parquet")))
+    assert(started("ingest") == 0 && started("events") == 0, s"jobs started: $started")
+    assert(started("spark") >= 1, s"jobs started: $started")
+    assert(df.count() > 0)
+  }
+
+  test("building the benchmark's registry queries starts no Spark job") {
+    val names = Seq("q1_pricing", "q3_top_orders", "q5_region_volume", "q18_big_orders")
+    val started = jobsStarted(names.map(q => q -> (() => SparkEntry.queries(q)(spark, sf))): _*)
+    assert(started.values.forall(_ == 0), s"jobs started: $started")
+  }
+}
+
+/** Hadoop input path filter that hides files named `part-0…`. */
+class SkipPart0 extends org.apache.hadoop.fs.PathFilter {
+  override def accept(p: org.apache.hadoop.fs.Path): Boolean = !p.getName.startsWith("part-0")
 }
